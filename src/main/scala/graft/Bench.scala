@@ -47,14 +47,15 @@ object Bench {
     * measurements showed uniform 1.5-3x inflation windows (light and
     * heavy keys alike) that no JVM-internal metric explained; hypervisor
     * CPU steal is the remaining suspect and this column attributes it
-    * per key (interval steal% = d(steal)/d(total)). Linux-only; (0, 0)
-    * where /proc/stat is absent. */
+    * per key (interval steal% = d(steal)/d(total)). The total sums the
+    * first 8 fields only: guest and guest_nice are already counted in
+    * user and nice. Linux-only; (0, 0) where /proc/stat is absent. */
   private def cpuSteal: (Long, Long) =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
       try {
         val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        (f(7), f.sum)
+        (f(7), f.take(8).sum)
       } finally src.close()
     } catch { case _: Throwable => (0L, 0L) }
 
@@ -109,8 +110,10 @@ object Bench {
     def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val ok = results.filter(_._3.isEmpty)
     val qs = ok.map { case (k, v, _) => s"${j(k)}:$v" }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e)) => s"${j(k)}:${j(e)}" }
+    def errors(maxLen: Int) = results
+      .collect { case (k, _, Some(e)) => s"${j(k)}:${j(e.take(maxLen))}" }
       .mkString("{", ",", "}")
+    val errs = errors(Int.MaxValue)
     val total = ok.map(_._2).sum
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":${j(sfDir)}}"""
     println(full)
@@ -121,7 +124,8 @@ object Bench {
       val w = new java.io.PrintWriter(outPath)
       try w.println(full) finally w.close()
     } catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: $e") }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"errors":$errs,"queries_file":${j(outPath)},"sf":${j(sfDir)}}""")
+    // the summary truncates each error string; bench_out.json keeps them whole
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"errors":${errors(120)},"queries_file":${j(outPath)},"sf":${j(sfDir)}}""")
     spark.stop()
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.bel.{Exporters, NamespaceFiles, NamespaceSpec, NamespaceStore}
 import graft.core.{GraftSession, SourceContext, SourceRegistry}
+import graft.gates.{DedupGates, GraphGates, TemporalGates, TextGates}
 import graft.sources._
 
 /** The aggregate CLI (reference cli.py:34-233): drive every registered
@@ -196,19 +197,9 @@ object Cli {
         println(s"wrote $f")
       case "curate-v2" => // the t_curate_v2 pipeline as a batch job
         val out = opts.getOrElse("out", s"$warehouse/_curated")
-        import graft.ops.{Dedup, TextAnalysis}
-        val docs = spark.read.parquet(docsPath)
-        val quality = TextAnalysis.qualityMetrics(docs)
-          .filter(col("n_tokens") >= 10 && col("alpha_ratio") >= 0.5)
-        val rep = TextAnalysis.repetitionMetrics(quality)
-          .filter(col("dup_word_frac") <= 0.5 &&
-            col("max_word_freq_frac") <= 0.12)
-        val survivors = Dedup.exactSurvivors(docs)
-          .select(col("survivor_id").as("doc_id"))
-        val curated = rep.join(survivors, Seq("doc_id"), "left_semi")
-          .filter(TextAnalysis.langId(col("text")) === "en")
+        TextGates.curated(spark.read.parquet(docsPath))
           .select("doc_id", "n_tokens", "dup_word_frac")
-        curated.write.mode("overwrite").parquet(out)
+          .write.mode("overwrite").parquet(out)
         println(s"curated ${spark.read.parquet(out).count()} documents -> $out")
       case "ivfadc" => // build a persisted IVFADC index, run a query batch
         val out = opts.getOrElse("out", s"$warehouse/_ivfadc")
@@ -275,14 +266,7 @@ object Cli {
         val n = opts.getOrElse("top", "10").toInt
         val edges = opts.get("edges") match {
           case Some(p) => spark.read.parquet(p) // (src, dst[, weight])
-          case None =>
-            spark.read.parquet(s"$sfDir/supplier.parquet").select(
-                concat(lit("s:"), col("s_suppkey")).as("src"),
-                concat(lit("n:"), col("s_nationkey")).as("dst"))
-              .unionByName(
-                spark.read.parquet(s"$sfDir/nation.parquet").select(
-                  concat(lit("n:"), col("n_nationkey")).as("src"),
-                  concat(lit("r:"), col("n_regionkey")).as("dst")))
+          case None => GraphGates.dimensionEdges(spark, sfDir)
         }
         val ranks = opts.get("weight") match {
           case Some(wc) => graft.bel.PageRank.runWeighted(edges, wc, iters)
@@ -295,14 +279,7 @@ object Cli {
         val n = opts.getOrElse("top", "10").toInt
         val edges = opts.get("edges") match {
           case Some(p) => spark.read.parquet(p) // (src, dst)
-          case None => // harness default: the reversed dimension graph
-            spark.read.parquet(s"$sfDir/nation.parquet").select(
-                concat(lit("r:"), col("n_regionkey")).as("src"),
-                concat(lit("n:"), col("n_nationkey")).as("dst"))
-              .unionByName(
-                spark.read.parquet(s"$sfDir/supplier.parquet").select(
-                  concat(lit("n:"), col("s_nationkey")).as("src"),
-                  concat(lit("s:"), col("s_suppkey")).as("dst")))
+          case None => GraphGates.reversedDimensionEdges(spark, sfDir)
         }
         // --seeds "node[=w],node[=w]" (weight optional, default 1).
         // '=' separates the weight so node names containing ':' (the
@@ -332,14 +309,7 @@ object Cli {
         val n = opts.getOrElse("top", "20").toInt
         val edges = opts.get("edges") match {
           case Some(p) => spark.read.parquet(p) // (src, dst)
-          case None =>
-            spark.read.parquet(s"$sfDir/supplier.parquet").select(
-                concat(lit("s:"), col("s_suppkey")).as("src"),
-                concat(lit("n:"), col("s_nationkey")).as("dst"))
-              .unionByName(
-                spark.read.parquet(s"$sfDir/nation.parquet").select(
-                  concat(lit("n:"), col("n_nationkey")).as("src"),
-                  concat(lit("r:"), col("n_regionkey")).as("dst")))
+          case None => GraphGates.dimensionEdges(spark, sfDir)
         }
         val labels = graft.bel.LabelPropagation.run(edges, iters)
         labels.groupBy("label").agg(count(lit(1)).as("size"))
@@ -348,14 +318,7 @@ object Cli {
       case "modularity" => // community-quality score (a33_modularity)
         val edges = opts.get("edges") match {
           case Some(p) => spark.read.parquet(p)
-          case None =>
-            spark.read.parquet(s"$sfDir/supplier.parquet").select(
-                concat(lit("s:"), col("s_suppkey")).as("src"),
-                concat(lit("n:"), col("s_nationkey")).as("dst"))
-              .unionByName(
-                spark.read.parquet(s"$sfDir/nation.parquet").select(
-                  concat(lit("n:"), col("n_nationkey")).as("src"),
-                  concat(lit("r:"), col("n_regionkey")).as("dst")))
+          case None => GraphGates.dimensionEdges(spark, sfDir)
         }
         val labels = opts.get("labels") match {
           case Some(p) => spark.read.parquet(p) // (node, label)
@@ -376,16 +339,8 @@ object Cli {
           opts.getOrElse("col", "text"))
         val recs = in.select(col(idc).cast("long").as("id"),
           col(sc).cast("string").as("s"))
-        val pairs = graft.ops.FuzzyJoin.fuzzyPairs(recs, "id", "s",
-          maxDist = opts.getOrElse("max-dist", "2").toInt)
-        val cc = graft.bel.ConnectedComponents.run(
-          pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
-        val canon = cc.groupBy("component").agg(min("node").as("ent"))
-        val matched = cc.join(canon, "component")
-          .select(col("node").as("id"), col("ent"))
-        recs.select("id").join(matched, Seq("id"), "left")
-          .select(col("id"), coalesce(col("ent"), col("id"))
-            .as("entity_id"))
+        DedupGates.resolveEntities(recs,
+            maxDist = opts.getOrElse("max-dist", "2").toInt)
           .write.mode("overwrite").parquet(out)
         val back = spark.read.parquet(out)
         println(s"${back.count()} records -> " +
@@ -411,19 +366,8 @@ object Cli {
       case "kcore" => // dense-subgraph extraction (a19_kcore)
         val k = opts.getOrElse("k", "3").toInt
         val n = opts.getOrElse("top", "20").toInt
-        val edges = opts.get("edges") match {
-          case Some(p) => spark.read.parquet(p) // (src, dst) edge parquet
-          case None => // harness default: co-purchased part pairs
-            val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-              .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-              .distinct()
-            li.select(col("ok"), col("pk").as("p1"))
-              .join(li.select(col("ok"), col("pk").as("p2")), Seq("ok"))
-              .filter(col("p1") < col("p2"))
-              .groupBy("p1", "p2").agg(count(lit(1)).as("c"))
-              .filter(col("c") >= 2)
-              .select(col("p1").as("src"), col("p2").as("dst"))
-        }
+        val edges = opts.get("edges").map(spark.read.parquet(_))
+          .getOrElse(Queries.coPurchaseEdges(spark, sfDir))
         val core = graft.bel.KCore.run(edges, k)
         core.orderBy(col("core_deg").desc, col("node")).limit(n)
           .collect().foreach(r => println(r.mkString("\t")))
@@ -502,7 +446,7 @@ object Cli {
           .foreach(r => println(r.mkString("\t")))
       case "bfs" => // hop distances + the σ/betweenness/weighted faces
         val edges = opts.get("edges").map(spark.read.parquet(_))
-          .getOrElse(Round8Queries.coPurchaseEdges(spark, sfDir))
+          .getOrElse(Queries.coPurchaseEdges(spark, sfDir))
         val seeds = opts.get("seeds") match {
           case Some(csv) =>
             import spark.implicits._
@@ -600,10 +544,8 @@ object Cli {
       case "resample" => // fixed-grid forward-fill (j16_resample_ffill)
         val out = opts.getOrElse("out", s"$warehouse/_resampled")
         val in = opts.get("input").map(spark.read.parquet(_))
-          .getOrElse(graft.core.Tables.events(spark, sfDir)
-            .groupBy(col("user_id"),
-              unix_micros(col("ts").cast("timestamp")).as("ts_us"))
-            .agg(max("event_id").as("event_id"), max("value").as("value")))
+          .getOrElse(TemporalGates.userObservations(
+            graft.core.Tables.events(spark, sfDir)))
         val keys = opts.getOrElse("keys", "user_id")
           .split(",").map(_.trim).filter(_.nonEmpty).toSeq
         graft.ops.Temporal.resampleFfill(in, keys,
@@ -741,19 +683,10 @@ object Cli {
         val budget = opts.getOrElse("seq-len", "256").toInt
         val shards = opts.getOrElse("shards", "8").toInt
         val merges = opts.getOrElse("merges", "60").toInt
-        import graft.ops.{Bpe, Dedup, TextAnalysis, TrainingPrep}
-        val docs = spark.read.parquet(docsPath)
-        val quality = TextAnalysis.qualityMetrics(docs)
-          .filter(col("n_tokens") >= opts.getOrElse("min-words", "10").toInt
-            && col("alpha_ratio") >= 0.5)
-        val rep = TextAnalysis.repetitionMetrics(quality)
-          .filter(col("dup_word_frac") <= 0.5 &&
-            col("max_word_freq_frac") <= 0.12)
-          .filter(TextAnalysis.langId(col("text")) ===
-            opts.getOrElse("lang", "en"))
-        val survivors = Dedup.exactSurvivors(docs)
-          .select(col("survivor_id").as("doc_id"))
-        val curated = rep.join(survivors, Seq("doc_id"), "left_semi")
+        import graft.ops.{Bpe, TrainingPrep}
+        val curated = TextGates.curated(spark.read.parquet(docsPath),
+            minTokens = opts.getOrElse("min-words", "10").toInt,
+            lang = opts.getOrElse("lang", "en"))
           .select("doc_id", "text")
         val m = Bpe.train(curated.select(col("text")),
           numMerges = merges, topWords = 20000)
@@ -767,7 +700,7 @@ object Cli {
       case "walks" => // deterministic embedding walks (g10/g12)
         val out = opts.getOrElse("out", s"$warehouse/_walks")
         val edges = opts.get("edges").map(spark.read.parquet(_))
-          .getOrElse(Round8Queries.coPurchaseEdges(spark, sfDir))
+          .getOrElse(Queries.coPurchaseEdges(spark, sfDir))
         val w = graft.bel.RandomWalks.walks(edges,
           steps = opts.getOrElse("steps", "4").toInt)
         val result = opts.get("window") match {
@@ -946,7 +879,7 @@ object Cli {
         println(s"${g.count()} moment cells in $out")
       case "ktruss" => // cohesive-subgraph extraction (a40_ktruss)
         val ed = opts.get("input").map(spark.read.parquet(_))
-          .getOrElse(Round8Queries.coPurchaseEdges(spark, sfDir))
+          .getOrElse(Queries.coPurchaseEdges(spark, sfDir))
         if (opts.contains("decompose")) {
           graft.bel.KTruss.trussness(ed,
               maxK = opts.getOrElse("max-k", "16").toInt,
@@ -963,7 +896,7 @@ object Cli {
         }
       case "assortativity" => // degree mixing (a41_assortativity)
         val ed = opts.get("input").map(spark.read.parquet(_))
-          .getOrElse(Round8Queries.coPurchaseEdges(spark, sfDir))
+          .getOrElse(Queries.coPurchaseEdges(spark, sfDir))
         graft.bel.Assortativity.degreeAssortativity(ed).collect()
           .foreach(r => println(r.mkString("\t")))
       case "wav-energy" => // windowed audio energy (mm_wav_energy)
@@ -992,11 +925,7 @@ object Cli {
         } finally flagged.unpersist()
       case "scc" => // strongly connected components (a45_scc)
         val ed = opts.get("input").map(spark.read.parquet(_))
-          .getOrElse(graft.core.Tables.load(spark, sfDir, "lineitem")
-            .filter(col("l_orderkey") % 53 === 0)
-            .select((col("l_partkey") % 500).as("src"),
-              ((col("l_partkey") * 7 + col("l_suppkey")) % 500).as("dst"))
-            .filter(col("src") =!= col("dst")))
+          .getOrElse(GraphGates.sccEdges(spark, sfDir))
         val scc = graft.bel.Scc.run(ed).persist()
         try {
           scc.groupBy("component").agg(count(lit(1)).as("members"))
@@ -1008,7 +937,7 @@ object Cli {
         } finally scc.unpersist()
       case "hits" => // hubs and authorities (a47_hits)
         val ed = opts.get("input").map(spark.read.parquet(_))
-          .getOrElse(Round8Queries.coPurchaseEdges(spark, sfDir))
+          .getOrElse(Queries.coPurchaseEdges(spark, sfDir))
         val ha = graft.bel.Hits.run(ed,
           iterations = opts.getOrElse("iterations", "8").toInt).persist()
         try {
@@ -1038,9 +967,7 @@ object Cli {
       case "heavy-hitters" => // Misra-Gries summary (o18; top-values is exact)
         val docs = opts.get("input").map(spark.read.parquet(_))
           .getOrElse(spark.read.parquet(docsPath))
-        val toks = docs
-          .select(explode(split(lower(col("text")), "\\s+")).as("tok"))
-          .filter(length(col("tok")) > 0)
+        val toks = Queries.docTokens(docs)
         graft.ops.Profile.heavyHitters(toks.withColumn("g", lit(1)),
             Seq("g"), "tok", opts.getOrElse("k", "32").toInt)
           .select(explode(col("hits")).as("h"))

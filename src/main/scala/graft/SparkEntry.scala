@@ -1,30 +1,19 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+import graft.gates.Gates
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query (gene-set pathway enrichment, reference
     * compath/manager.py:203-236) on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.queries("a6_enrich")(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
+    queries("a6_enrich")(spark, "/root/testdata/sf0.001")
+  /** One entry per registered gate ([[graft.gates.Gates.all]]). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.queries ++ MoreQueries.queries ++ Round3Queries.queries ++
-      Round4Queries.queries ++ Round6Queries.queries ++
-      Round7Queries.queries ++ Round8Queries.queries ++
-      Round8bQueries.queries ++ Round9Queries.queries ++
-      Round10Queries.queries ++ Round11Queries.queries ++
-      Round11bQueries.queries ++ Round12Queries.queries ++
-      Round13Queries.queries
+    Gates.all.map(g => g.name -> g.build).toMap
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Every registered query has an oracle: the
     * two approximate/engine-hash ops are gated via boolean invariant
     * queries (s_lsh_recall, d_simhash_invariant) instead of raw dumps. */
   def oracleSql: Map[String, String] =
-    Queries.oracleSql ++ MoreQueries.oracleSql ++ Round3Queries.oracleSql ++
-      Round4Queries.oracleSql ++ Round6Queries.oracleSql ++
-      Round7Queries.oracleSql ++ Round8Queries.oracleSql ++
-      Round8bQueries.oracleSql ++ Round9Queries.oracleSql ++
-      Round10Queries.oracleSql ++ Round11Queries.oracleSql ++
-      Round11bQueries.oracleSql ++ Round12Queries.oracleSql ++
-      Round13Queries.oracleSql
+    Gates.all.map(g => g.name -> g.oracleSql).toMap
 }

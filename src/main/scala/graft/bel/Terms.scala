@@ -23,9 +23,6 @@ object Terms {
     struct(lit(kind).as("kind"), lit(namespace).as("namespace"),
       lit(identifier).as("identifier"), lit(name).as("name"))
 
-  def belPmod(shortCode: String): Column =
-    variant("pmod", "bel", null, shortCode)
-
   val noVariants: Column =
     lit(null).cast("array<struct<kind:string,namespace:string," +
       "identifier:string,name:string>>")

@@ -156,7 +156,13 @@ final class SourceContext(val spark: SparkSession, warehouse: String, module: St
   * utils.py:146-167; zero-egress engine registers explicitly). */
 final class SourceRegistry {
   private var sources = Map.empty[String, Source]
-  def register(s: Source): this.type = { sources += (s.moduleName -> s); this }
+  /** Adds `s`; throws if a source with the same `moduleName` is already
+    * registered (a silent replace would drop the earlier source). */
+  def register(s: Source): this.type = {
+    require(!sources.contains(s.moduleName),
+      s"source ${s.moduleName} is already registered")
+    sources += (s.moduleName -> s); this
+  }
   def get(name: String): Option[Source] = sources.get(name)
   def names: Seq[String] = sources.keys.toSeq.sorted
   def all: Seq[Source] = names.flatMap(sources.get)

@@ -93,7 +93,4 @@ object Readers {
   val circRnaSchema: StructType = StructType(Seq(
     "circrna_name", "circrna_id", "disease", "method", "species",
     "expression_pattern", "pmid", "title").map(StructField(_, StringType)))
-
-  def circRnaDisease(spark: SparkSession, path: String): DataFrame =
-    csv(spark, path, circRnaSchema, sep = "\t")
 }

@@ -65,13 +65,6 @@ object Expectations {
       coalesce(avg(col(c).isin(allowed: _*).cast("double")), lit(1.0)),
       _ === 1.0)
 
-  /** Pattern conformance: fraction of non-null values matching `re`
-    * must reach `minFrac`. */
-  def matchesRegex(c: String, re: String, minFrac: Double): Check =
-    Check(s"matches_regex($c)",
-      coalesce(avg(regexp_like(col(c), lit(re)).cast("double")), lit(1.0)),
-      _ >= minFrac)
-
   /** Row count within [lo, hi]. */
   def rowCountBetween(lo: Long, hi: Long): Check =
     Check(s"row_count($lo,$hi)",

@@ -66,10 +66,6 @@ object TextAnalysis {
     * byte-identical across engines, so oracle-checkable). */
   def fingerprint(text: Column): Column = md5(normalized(text))
 
-  /** 64-bit rolling fingerprint (xxhash64 of normalized text) — cheaper
-    * join key than the hex md5 at 100 TB scale. */
-  def fingerprint64(text: Column): Column = xxhash64(normalized(text))
-
   /** Marker-word languages for the n-gram/stopword heuristic. */
   val langMarkers: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "of", "and", "is"),

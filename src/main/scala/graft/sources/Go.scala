@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,10 +19,6 @@ object Go {
     StructField("target_id", StringType),
     StructField("target_label", StringType),
     StructField("negated", BooleanType)))
-
-  /** S13: flattened association JSON scan. */
-  def readAssociations(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(assocSchema).json(path)
 
   /** go.py:75-86: human-only + UniProtKB-only filters, prefix strips,
     * uniprot→hgnc (drop missing) and hgnc→ncbigene (strict — the

@@ -117,4 +117,13 @@ class TestSourceSpec extends SparkSpec {
     assert(r.names === Seq("test"))
     assert(r.get("test").isDefined && r.get("nope").isEmpty)
   }
+
+  test("registry rejects a second source with the same module name") {
+    val r = new SourceRegistry
+    val first = new TestSource
+    r.register(first)
+    val e = intercept[IllegalArgumentException](r.register(new TestSource))
+    assert(e.getMessage.contains("test"))
+    assert(r.get("test").exists(_ eq first))
+  }
 }
