@@ -91,11 +91,22 @@ object Cli {
     r
   }
 
+  /** `--key value` pairs. A flag without a value is an error: pairing
+    * it with the next flag would drop that flag and shift every later
+    * pair. */
+  private[graft] def options(args: Seq[String]): Map[String, String] =
+    args.grouped(2).collect {
+      case Seq(k, v) if k.startsWith("--") =>
+        if (v.startsWith("--"))
+          throw new IllegalArgumentException(s"$k needs a value, got flag $v")
+        k.drop(2) -> v
+      case Seq(k) if k.startsWith("--") =>
+        throw new IllegalArgumentException(s"$k needs a value")
+    }.toMap
+
   def main(args: Array[String]): Unit = {
     val cmd = args.headOption.getOrElse("help")
-    val opts = args.drop(1).sliding(2, 2)
-      .collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }
-      .toMap
+    val opts = options(args.drop(1))
     val warehouse = opts.getOrElse("warehouse", "/tmp/graft-warehouse")
     val sfDir = opts.getOrElse("sf-dir", "/root/testdata/sf0.001")
     // documents/embeddings-shaped inputs default to the harness layout but

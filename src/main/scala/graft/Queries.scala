@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.compath.PathwayStore
 import graft.core.Tables
-import graft.gates.GateMemo
 import graft.ops.TextAnalysis
 import graft.sources.Intact
 
@@ -198,40 +196,27 @@ object Queries {
     body(scoped)
   }
 
-  /** Co-purchase part graph for the k-core gate, memoized per
-    * (SparkContext, sf dir) as a temp-parquet spill — same posture as the
-    * co-supply memo (`coSupplyEdges`): the lineitem
-    * self-join CONSTRUCTING the dimension-sized graph dominates the raw
-    * cost, and re-deriving it per invocation measures the corpus scan,
-    * not the operator. Parts are linked when they co-occur in ≥ 2 orders
-    * (co-occurrence at all is near-complete on this corpus; repetition is
-    * the sparsifier). */
-  private val coPurchaseMemo = new GateMemo[SparkContext, String]
-
+  /** Co-purchase part graph for the k-core gate, spilled to temp parquet
+    * so operators read a file scan of the dimension-sized graph, not the
+    * lineitem self-join constructing it (same posture as `coSupplyEdges`).
+    * Parts are linked when they co-occur in ≥ 2 orders (co-occurrence at
+    * all is near-complete on this corpus; repetition is the sparsifier). */
   private[graft] def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
-    val path = coPurchaseMemo(s.sparkContext, d) {
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      val a = li.select(col("ok"), col("pk").as("p1"))
-      val b = li.select(col("ok"), col("pk").as("p2"))
-      val out = s"/tmp/graft_copurchase_${sfTag(d)}"
-      a.join(b, Seq("ok"))
-        .filter(col("p1") < col("p2"))
-        .groupBy("p1", "p2").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= 2)
-        .select(col("p1").as("src"), col("p2").as("dst"))
-        .coalesce(4)
-        .write.mode("overwrite").parquet(out)
-      out
-    }
-    s.read.parquet(path)
+    val li = t(s, d, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct()
+    val a = li.select(col("ok"), col("pk").as("p1"))
+    val b = li.select(col("ok"), col("pk").as("p2"))
+    val out = s"/tmp/graft_copurchase_${sfTag(d)}"
+    a.join(b, Seq("ok"))
+      .filter(col("p1") < col("p2"))
+      .groupBy("p1", "p2").agg(count(lit(1)).as("c"))
+      .filter(col("c") >= 2)
+      .select(col("p1").as("src"), col("p2").as("dst"))
+      .coalesce(4)
+      .write.mode("overwrite").parquet(out)
+    s.read.parquet(out)
   }
-
-  /** Layout gates write once per (SparkContext, key) and re-read on every
-    * invocation — re-writing per bench run would measure the sink, not
-    * the read-side layout contract. */
-  private[graft] val layoutMemo = new GateMemo[SparkContext, String]
 
   /** The shared k19/w_stream_cdc changelog: every order becomes one
     * change row (seq = o_orderkey + 1: orderkey 0 exists in the corpus

@@ -40,10 +40,9 @@ object GraftSession {
       // without one, so a long many-query session accumulates dead blocks
       // until memory pressure forces the collection at the worst time.
       // 2 min bounds the dead-block inventory at ~zero measured cost
-      // (full-bench instrumentation: storage stays <200 MB either way);
-      // override via SPARK_GRAFT_PERIODIC_GC for cluster tuning.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
+      // (full-bench instrumentation: storage stays <200 MB either way).
+      // Another interval: set this key on the builder after `configure`.
+      .config("spark.cleaner.periodicGC.interval", "2min")
 
   /** Production streaming posture: RocksDB-backed state stores. The
     * default HDFS-backed provider keeps every key's state resident in

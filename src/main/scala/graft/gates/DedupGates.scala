@@ -1,7 +1,6 @@
 package graft
 package gates
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -48,33 +47,22 @@ object DedupGates {
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
   }
 
-  /** Fingerprint index of the prior snapshot, built once per
-    * (SparkContext, sf dir); the survivors gate probes it repeatedly. */
-  private val fpIndexMemo = new GateMemo[SparkContext, String]
-
+  /** Writes the fingerprint index of the prior snapshot; returns its path. */
   private def fingerprintIndex(s: SparkSession, d: String): String = {
-    fpIndexMemo(s.sparkContext, d) {
-      val path = s"/tmp/graft_fpidx_${sfTag(d)}"
-      rmrf(s, path)
-      graft.ops.Dedup.writeFingerprintIndex(incPrior(s, d), path)
-      path
-    }
+    val path = s"/tmp/graft_fpidx_${sfTag(d)}"
+    rmrf(s, path)
+    graft.ops.Dedup.writeFingerprintIndex(incPrior(s, d), path)
+    path
   }
 
-  /** MinHash index of the prior snapshot (near-dup twin of
-    * [[fingerprintIndex]]), built once per (SparkContext, sf dir). */
-  private val mhIndexMemo = new GateMemo[SparkContext, String]
-
+  /** Writes the MinHash index of the prior snapshot (near-dup twin of
+    * [[fingerprintIndex]]); returns its path. */
   private def minHashIndex(s: SparkSession, d: String): String = {
-    mhIndexMemo(s.sparkContext, d) {
-      val path = s"/tmp/graft_mhidx_${sfTag(d)}"
-      rmrf(s, path)
-      graft.ops.Dedup.writeMinHashIndex(incPrior(s, d), path)
-      path
-    }
+    val path = s"/tmp/graft_mhidx_${sfTag(d)}"
+    rmrf(s, path)
+    graft.ops.Dedup.writeMinHashIndex(incPrior(s, d), path)
+    path
   }
-
-  private val incAppendMemo = new GateMemo[SparkContext, (Boolean, Boolean)]
 
   private val incBatchSql =
     """SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
@@ -83,8 +71,6 @@ object DedupGates {
       |  UNION ALL
       |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 3 = 0
       |""".stripMargin
-
-  private val erMemo = new GateMemo[SparkSession, String]
 
   /** 40 distinct lowercase filler words appended to every 25th document
     * to plant near-superset pairs (prefix contained, resemblance
@@ -614,20 +600,17 @@ object DedupGates {
     // snapshot-over-snapshot dedup chains safe to re-run.
     Gate("d_incremental_append", (s, d) => {
       import s.implicits._
-      val (appendMatches, secondEmpty) = incAppendMemo(s.sparkContext, d) {
-        val path = s"/tmp/graft_fpidx_app_${sfTag(d)}"
-        rmrf(s, path)
-        graft.ops.Dedup.writeFingerprintIndex(incPrior(s, d), path)
-        val batch = incBatch(s, d)
-        val n1 = graft.ops.Dedup
-          .incrementalSurvivors(s, path, batch).count()
-        val nApp = graft.ops.Dedup
-          .appendToFingerprintIndex(s, path, batch)
-        val n2 = graft.ops.Dedup
-          .incrementalSurvivors(s, path, batch).count()
-        (nApp == n1 && n1 > 0, n2 == 0L)
-      }
-      Seq((appendMatches, secondEmpty))
+      val path = s"/tmp/graft_fpidx_app_${sfTag(d)}"
+      rmrf(s, path)
+      graft.ops.Dedup.writeFingerprintIndex(incPrior(s, d), path)
+      val batch = incBatch(s, d)
+      val n1 = graft.ops.Dedup
+        .incrementalSurvivors(s, path, batch).count()
+      val nApp = graft.ops.Dedup
+        .appendToFingerprintIndex(s, path, batch)
+      val n2 = graft.ops.Dedup
+        .incrementalSurvivors(s, path, batch).count()
+      Seq((nApp == n1 && n1 > 0, n2 == 0L))
         .toDF("append_matches_first", "second_probe_empty")
     },
       "SELECT true AS append_matches_first, true AS second_probe_empty"),
@@ -729,20 +712,14 @@ object DedupGates {
     // operator; this pins the composition — the oracle recomputes the
     // whole chain from levenshtein + a recursive CTE.
     Gate("j18_er_entities", (s, d) => {
-      val out = erMemo(s, d) {
-        val base = t(s, d, "documents").select(
-          col("doc_id").cast("long").as("id"),
-          substring(col("text"), 1, 24).as("s"))
-        val pfx = (col("id") % 12 + 2).cast("int")
-        val pert = base.select((col("id") + 1000000L).as("id"),
-          concat(col("s").substr(lit(1), pfx),
-            col("s").substr(pfx + 2, lit(100))).as("s"))
-        val p = s"/tmp/graft_er_${sfTag(d)}"
-        rmrf(s, p)
-        resolveEntities(base.unionByName(pert), maxDist = 2).write.parquet(p)
-        p
-      }
-      s.read.parquet(out)
+      val base = t(s, d, "documents").select(
+        col("doc_id").cast("long").as("id"),
+        substring(col("text"), 1, 24).as("s"))
+      val pfx = (col("id") % 12 + 2).cast("int")
+      val pert = base.select((col("id") + 1000000L).as("id"),
+        concat(col("s").substr(lit(1), pfx),
+          col("s").substr(pfx + 2, lit(100))).as("s"))
+      resolveEntities(base.unionByName(pert), maxDist = 2)
     },
       """WITH base AS (
         |  SELECT CAST(doc_id AS BIGINT) AS id, substr(text, 1, 24) AS s

@@ -1,7 +1,6 @@
 package graft
 package gates
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -14,34 +13,26 @@ import graft.core.Tables
   * betweenness, k-core, k-truss, triangles, SCC, HITS, assortativity and
   * embedding walks (`bel`). */
 object GraphGates {
-  /** Co-supply edge list for the graph gates, memoized per
-    * (SparkContext, sf dir) as a temp-parquet spill — the same posture as
-    * the events feed: the lineitem self-join that CONSTRUCTS the
-    * dimension-sized graph (~49k edges at sf0.1) costs ~2 s per
-    * evaluation, and re-deriving it per bench run measures the corpus
-    * scan, not the graph operator. Parquet, not a driver-held local
-    * relation: a LocalTableScan re-ships the rows with every task while a
-    * 49k-row file scan is milliseconds and plans like any other source.
-    * The operator under test still runs in full every invocation. */
-  private val coSupplyMemo = new GateMemo[SparkContext, String]
-
+  /** Co-supply edge list for the graph gates, spilled to temp parquet:
+    * the operators under test read a file scan of the dimension-sized
+    * graph (~49k edges at sf0.1), not the lineitem self-join that
+    * constructs it. Parquet, not a driver-held local relation: a
+    * LocalTableScan re-ships the rows with every task while a 49k-row
+    * file scan is milliseconds and plans like any other source. */
   private def coSupplyEdges(s: SparkSession, d: String): DataFrame = {
-    val path = coSupplyMemo(s.sparkContext, d) {
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-      val a = li.select(col("ok"), col("sk").as("s1"))
-      val b = li.select(col("ok"), col("sk").as("s2"))
-      val out = s"/tmp/graft_cosupply_${sfTag(d)}"
-      a.join(b, Seq("ok"))
-        .filter(col("s1") < col("s2"))
-        .groupBy("s1", "s2").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= 5)
-        .select(col("s1").as("src"), col("s2").as("dst"))
-        .coalesce(4)
-        .write.mode("overwrite").parquet(out)
-      out
-    }
-    s.read.parquet(path)
+    val li = t(s, d, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
+    val a = li.select(col("ok"), col("sk").as("s1"))
+    val b = li.select(col("ok"), col("sk").as("s2"))
+    val out = s"/tmp/graft_cosupply_${sfTag(d)}"
+    a.join(b, Seq("ok"))
+      .filter(col("s1") < col("s2"))
+      .groupBy("s1", "s2").agg(count(lit(1)).as("c"))
+      .filter(col("c") >= 5)
+      .select(col("s1").as("src"), col("s2").as("dst"))
+      .coalesce(4)
+      .write.mode("overwrite").parquet(out)
+    s.read.parquet(out)
   }
 
   /** The [[graft.bel.PageRank]] recurrence unrolled to chained CTEs —
@@ -191,8 +182,6 @@ object GraphGates {
        |FROM d$levels
        |""".stripMargin
   }
-
-  private val ccIdxMemo = new GateMemo[SparkSession, String]
 
   /** Per-seed unrolled BFS relaxation + the lcm-exact harmonic fold —
     * the a21 `bfsOracle` pattern keyed on (seed, node). `levels` must
@@ -819,7 +808,7 @@ object GraphGates {
     // "How far is every part from the promoted set?" — seeds are the
     // p_partkey % 50 == 0 parts (graph members or not: isolated seeds
     // report hops 0), edges the ≥2-co-order co-purchase graph the kcore
-    // gate memoizes. Spark runs the relaxation to its fixpoint; the
+    // gate reads. Spark runs the relaxation to its fixpoint; the
     // oracle unrolls 12 levels, enough past the sf0.01 eccentricity (7)
     // that extra levels are the identity.
     Gate("a21_bfs_hops", (s, d) => {
@@ -970,28 +959,24 @@ object GraphGates {
     // writeIndex(base) → foldIndex(nation→region) → foldIndex(customer→
     // nation) against the bucket-partitioned layout; read-back labels
     // canonicalized to min node per component must equal the recursive
-    // CTE over the 3-way union. The fold chain runs once per (session,
-    // sf) — the k18/w_stream_dedup_index layout-memo posture.
+    // CTE over the 3-way union.
     Gate("a28_cc_index_persist", (s, d) => {
-      val path = ccIdxMemo(s, d) {
-        val base = t(s, d, "supplier").select(
-          concat(lit("s:"), col("s_suppkey")).as("src"),
-          concat(lit("n:"), col("s_nationkey")).as("dst"))
-        val d1 = t(s, d, "nation").select(
-          concat(lit("n:"), col("n_nationkey")).as("src"),
-          concat(lit("r:"), col("n_regionkey")).as("dst"))
-        val d2 = t(s, d, "customer").select(
-          concat(lit("c:"), col("c_custkey")).as("src"),
-          concat(lit("n:"), col("c_nationkey")).as("dst"))
-        val p = s"/tmp/graft_ccidx_${sfTag(d)}"
-        rmrf(s, p)
-        graft.bel.IncrementalCC.writeIndex(
-          graft.bel.ConnectedComponents.run(base), p, buckets = 16)
-        graft.bel.IncrementalCC.foldIndex(s, p, d1, buckets = 16)
-        graft.bel.IncrementalCC.foldIndex(s, p, d2, buckets = 16)
-        p
-      }
-      val folded = graft.bel.IncrementalCC.readIndex(s, path)
+      val base = t(s, d, "supplier").select(
+        concat(lit("s:"), col("s_suppkey")).as("src"),
+        concat(lit("n:"), col("s_nationkey")).as("dst"))
+      val d1 = t(s, d, "nation").select(
+        concat(lit("n:"), col("n_nationkey")).as("src"),
+        concat(lit("r:"), col("n_regionkey")).as("dst"))
+      val d2 = t(s, d, "customer").select(
+        concat(lit("c:"), col("c_custkey")).as("src"),
+        concat(lit("n:"), col("c_nationkey")).as("dst"))
+      val p = s"/tmp/graft_ccidx_${sfTag(d)}"
+      rmrf(s, p)
+      graft.bel.IncrementalCC.writeIndex(
+        graft.bel.ConnectedComponents.run(base), p, buckets = 16)
+      graft.bel.IncrementalCC.foldIndex(s, p, d1, buckets = 16)
+      graft.bel.IncrementalCC.foldIndex(s, p, d2, buckets = 16)
+      val folded = graft.bel.IncrementalCC.readIndex(s, p)
       val canon = folded.groupBy("component").agg(min("node").as("comp"))
       folded.join(canon, "component").select("node", "comp")
     },
@@ -1086,7 +1071,7 @@ object GraphGates {
 
     // --- Landmark harmonic closeness ------------------------------------------
     // "How central is every part to the promoted set?" — per-landmark
-    // BFS over the memoized co-purchase graph (landmarks = p_partkey %
+    // BFS over the co-purchase graph (landmarks = p_partkey %
     // 97), folded to exact integer (n_landmarks, hop_mass) and the
     // lcm-exact harmonic sum, so every column is engine-bit-exact. The
     // oracle unrolls the per-seed relaxation 12 levels (past the sf0.01
@@ -1131,7 +1116,7 @@ object GraphGates {
     // distinct shortest paths, depth-bounded at 4 (σ grows as
     // branching^depth — the k-betweenness posture; the cap also keeps
     // both engines inside BIGINT). Level-synchronous delta-frontier
-    // over the memoized co-purchase graph; the oracle unrolls the same
+    // over the co-purchase graph; the oracle unrolls the same
     // frontier/visited recurrence 4 levels.
     Gate("a36_path_counts", (s, d) => {
       val landmarks = t(s, d, "part")

@@ -584,24 +584,21 @@ object RelationalGates {
 
     // --- Mergeable sketch states across persisted snapshots -----------------
     // The telemetry-rollup posture: two disjoint "snapshots" each persist
-    // a per-key HLL state table once; corpus cardinalities then come from
+    // a per-key HLL state table; corpus cardinalities then come from
     // UNIONING the state files and merging — the raw snapshots are never
     // rescanned. Counts must sum exactly; the merged estimate must land
     // within the 5% HLL contract of the exact distinct count per key.
     Gate("a26_sketch_merge", (s, d) => {
-      val base = layoutMemo(s.sparkContext, s"$d#hllstates") {
-        val p = s"/tmp/graft_hll_${sfTag(d)}"
-        val ev = graft.core.Tables.events(s, d)
-        graft.ops.Profile.hllStates(
-          ev.filter(col("event_id") % 2 === 0), "event_type", "user_id")
-          .write.mode("overwrite").parquet(s"$p/s0")
-        graft.ops.Profile.hllStates(
-          ev.filter(col("event_id") % 2 === 1), "event_type", "user_id")
-          .write.mode("overwrite").parquet(s"$p/s1")
-        p
-      }
-      val states = s.read.parquet(s"$base/s0")
-        .unionByName(s.read.parquet(s"$base/s1"))
+      val p = s"/tmp/graft_hll_${sfTag(d)}"
+      val ev = graft.core.Tables.events(s, d)
+      graft.ops.Profile.hllStates(
+        ev.filter(col("event_id") % 2 === 0), "event_type", "user_id")
+        .write.mode("overwrite").parquet(s"$p/s0")
+      graft.ops.Profile.hllStates(
+        ev.filter(col("event_id") % 2 === 1), "event_type", "user_id")
+        .write.mode("overwrite").parquet(s"$p/s1")
+      val states = s.read.parquet(s"$p/s0")
+        .unionByName(s.read.parquet(s"$p/s1"))
       val merged = graft.ops.Profile.mergeHllStates(states, "event_type")
       val exact = graft.core.Tables.events(s, d).groupBy("event_type")
         .agg(countDistinct("user_id").as("d_exact"),

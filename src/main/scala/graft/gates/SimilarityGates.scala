@@ -13,11 +13,6 @@ import graft.ops.Similarity
   * `ops.IvfIndex`, `ops.ProductQuantization`, `ops.Pca`) and BM25 /
   * cosine text retrieval (`ops.TextSearch`). */
 object SimilarityGates {
-  /** One IVF index build per (session, sf dir) — index once, query many. */
-  private val ivfIndexMemo = new GateMemo[SparkSession, Unit]
-
-  private val ivfadcMemo = new GateMemo[SparkSession, Unit]
-
   /** Clustered corpus in the regime ANN serves (same construction as
     * s_lsh_recall / d_embed_pairs): every base vector gets a perturbed
     * twin, so each query's true nearest non-self neighbor IS its twin. */
@@ -28,30 +23,6 @@ object SimilarityGates {
       transform(col("embedding"),
         x => x + lit(0.001) * sin(col("vec_id") * 7)).as("embedding"))
     base.unionByName(twins)
-  }
-
-  /** (staleness of a same-distribution append, staleness of a shifted
-    * append) — memoized per (session, sf dir): two index builds per run. */
-  private val stalenessMemo = new GateMemo[SparkSession, (Double, Double)]
-
-  private val ivfBenchMemo = new GateMemo[SparkSession, Unit]
-
-  private val ivfRebuildMemo =
-    new GateMemo[SparkSession, (Boolean, Boolean, Boolean, Boolean)]
-
-  /** Memoized brute mutual-NN truth pairs per (session, sf dir) — the
-    * eventsFeed/ivfBenchMemo harness discipline: the truth side of the
-    * honest-recall gate is a deterministic O(N²) pass whose result
-    * never changes within a session, so bench reruns pay it once. */
-  private val mutualTruthMemo = new GateMemo[SparkSession, Seq[(Long, Long)]]
-
-  private def mutualTruthPairs(s: SparkSession, d: String,
-                               corpus: DataFrame): Seq[(Long, Long)] = {
-    mutualTruthMemo(s, d) {
-      import s.implicits._
-      graft.ops.Similarity.mutualTopOne(corpus)
-        .select("a", "b").as[(Long, Long)].collect().toSeq
-    }
   }
 
   private val bruteTopKSql: String =
@@ -114,15 +85,13 @@ object SimilarityGates {
     // dropped/duplicated/rewritten row would break the brute-force hash).
     Gate("s_ivf_index_topk", (s, d) => {
       val path = s"/tmp/graft_ivfidx_${sfTag(d)}"
-      ivfIndexMemo(s, d) {
-        val emb = t(s, d, "embeddings")
-        graft.ops.IvfIndex.build(emb.filter(col("vec_id") % 4 =!= 0), path,
-          nList = 8)
-        graft.ops.IvfIndex.append(s, path,
-          emb.filter(col("vec_id") % 4 === 0))
-        ()
-      }
-      val queriesDf = t(s, d, "embeddings").filter(col("vec_id") < 8)
+      rmrf(s, path)
+      val emb = t(s, d, "embeddings")
+      graft.ops.IvfIndex.build(emb.filter(col("vec_id") % 4 =!= 0), path,
+        nList = 8)
+      graft.ops.IvfIndex.append(s, path,
+        emb.filter(col("vec_id") % 4 === 0))
+      val queriesDf = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding"))
       graft.ops.IvfIndex.topK(s, path, queriesDf, k = 4, nProbe = 8)
         .withColumn("cosine", round(col("cosine"), 6))
@@ -192,14 +161,11 @@ object SimilarityGates {
     Gate("s_ivfadc_recall", (s, d) => {
       val corpus = twinCorpus(t(s, d, "embeddings"))
       val path = s"/tmp/graft_ivfadc_${sfTag(d)}"
-      ivfadcMemo(s, d) {
-        rmrf(s, path)
-        graft.ops.IvfIndex.build(corpus.filter(col("vec_id") % 5 =!= 0),
-          path, nList = 8, pqM = 8, pqK = 16)
-        graft.ops.IvfIndex.append(s, path,
-          corpus.filter(col("vec_id") % 5 === 0))
-        ()
-      }
+      rmrf(s, path)
+      graft.ops.IvfIndex.build(corpus.filter(col("vec_id") % 5 =!= 0),
+        path, nList = 8, pqM = 8, pqK = 16)
+      graft.ops.IvfIndex.append(s, path,
+        corpus.filter(col("vec_id") % 5 === 0))
       val qs = corpus.filter(col("vec_id") < 16)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val truth = graft.ops.Similarity.bruteForceTopK(corpus, qs, k = 1)
@@ -392,36 +358,34 @@ object SimilarityGates {
     // stale — rebuild triggers hang off this separation.
     Gate("s_ivf_staleness", (s, d) => {
       import s.implicits._
-      val (same, shifted) = stalenessMemo(s, d) {
-        val emb = t(s, d, "embeddings").select(col("vec_id"),
-          graft.functions.Vectors.toDouble(col("embedding")).as("embedding"))
-        val anchors = broadcast(emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("k"), col("embedding").as("anchor")))
-        // cluster key from vec_id div 2: independent of the even/odd
-        // build/append split below, so BOTH halves cover all 8 clusters
-        // (a plain vec_id % 8 would send even ids to even clusters only —
-        // the "in-distribution" append would then be genuine drift)
-        val clustered = emb.filter(col("vec_id") >= 8)
-          .withColumn("k", expr("(vec_id div 2) % 8"))
-          .join(anchors, "k")
-          .select(col("vec_id"),
-            zip_with(col("anchor"), col("embedding"),
-              (a, x) => a + lit(0.05) * x).as("embedding"))
-        val base = clustered.filter(col("vec_id") % 2 === 0)
-        val addIn = clustered.filter(col("vec_id") % 2 === 1)
-        val addOff = emb.filter(col("vec_id") >= 8 && col("vec_id") % 2 === 1)
-        val tag = sfTag(d)
-        def stalenessOf(suffix: String, rows: DataFrame): Double = {
-          val path = s"/tmp/graft_staleness_${tag}_$suffix"
-          rmrf(s, path)
-          graft.ops.IvfIndex.build(base, path, nList = 8)
-          graft.ops.IvfIndex.append(s, path, rows).staleness
-        }
-        (stalenessOf("same", addIn), stalenessOf("off", addOff))
+      val emb = t(s, d, "embeddings").select(col("vec_id"),
+        graft.functions.Vectors.toDouble(col("embedding")).as("embedding"))
+      val anchors = broadcast(emb.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("k"), col("embedding").as("anchor")))
+      // cluster key from vec_id div 2: independent of the even/odd
+      // build/append split below, so BOTH halves cover all 8 clusters
+      // (a plain vec_id % 8 would send even ids to even clusters only —
+      // the "in-distribution" append would then be genuine drift)
+      val clustered = emb.filter(col("vec_id") >= 8)
+        .withColumn("k", expr("(vec_id div 2) % 8"))
+        .join(anchors, "k")
+        .select(col("vec_id"),
+          zip_with(col("anchor"), col("embedding"),
+            (a, x) => a + lit(0.05) * x).as("embedding"))
+      val base = clustered.filter(col("vec_id") % 2 === 0)
+      val addIn = clustered.filter(col("vec_id") % 2 === 1)
+      val addOff = emb.filter(col("vec_id") >= 8 && col("vec_id") % 2 === 1)
+      val tag = sfTag(d)
+      def stalenessOf(suffix: String, rows: DataFrame): Double = {
+        val path = s"/tmp/graft_staleness_${tag}_$suffix"
+        rmrf(s, path)
+        graft.ops.IvfIndex.build(base, path, nList = 8)
+        graft.ops.IvfIndex.append(s, path, rows).staleness
       }
-      Seq((same, shifted)).toDF("st_same", "st_off").select(
-        (col("st_off") > col("st_same") + 0.3).as("drift_separates"),
-        (abs(col("st_same")) < 0.05).as("in_dist_near_zero"))
+      Seq((stalenessOf("same", addIn), stalenessOf("off", addOff)))
+        .toDF("st_same", "st_off").select(
+          (col("st_off") > col("st_same") + 0.3).as("drift_separates"),
+          (abs(col("st_same")) < 0.05).as("in_dist_near_zero"))
     },
       "SELECT true AS drift_separates, true AS in_dist_near_zero"),
 
@@ -479,12 +443,9 @@ object SimilarityGates {
       val corpus = t(s, d, "embeddings").select(col("vec_id"),
         graft.functions.Vectors.toDouble(col("embedding")).as("embedding"))
       val path = s"/tmp/graft_ivfbench_${sfTag(d)}"
-      ivfBenchMemo(s, d) {
-          rmrf(s, path)
-          graft.ops.IvfIndex.build(corpus, path, nList = 16,
-            refineIterations = 3)
-          ()
-        }
+      rmrf(s, path)
+      graft.ops.IvfIndex.build(corpus, path, nList = 16,
+        refineIterations = 3)
       val qs = corpus.filter(col("vec_id") < 32)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val truth = graft.ops.Similarity.bruteForceTopK(corpus, qs, k = 10)
@@ -513,50 +474,47 @@ object SimilarityGates {
     // width — so the gate keeps session defaults, the a28 discipline)
     Gate("s_ivf_rebuild", (s, d) => {
       import s.implicits._
-      val (drift, fired, restored, recallOk) =
-        ivfRebuildMemo(s, d) {
-          val emb = t(s, d, "embeddings").select(col("vec_id"),
-            graft.functions.Vectors.toDouble(col("embedding"))
-              .as("embedding"))
-          val anchors = broadcast(emb.filter(col("vec_id") < 16)
-            .select((col("vec_id") % 16).as("k"),
-              col("embedding").as("anchor")))
-          val clustered = emb.filter(col("vec_id") >= 16)
-            .withColumn("k", expr("(vec_id div 2) % 16"))
-            .join(anchors, "k")
-            .select(col("k"), col("vec_id"),
-              zip_with(col("anchor"), col("embedding"),
-                (a, x) => a + lit(0.05) * x).as("embedding"))
-          val base = clustered.filter(col("k") < 8)
-            .select("vec_id", "embedding")
-          val newCells = clustered.filter(col("k") >= 8)
-            .select("vec_id", "embedding")
-          val path = s"/tmp/graft_ivfrebuild_${sfTag(d)}"
-          rmrf(s, path)
-          graft.ops.IvfIndex.build(base, path, nList = 8,
-            refineIterations = 2)
-          val st = graft.ops.IvfIndex.append(s, path, newCells)
-          val rb = graft.ops.IvfIndex.rebuildIfStale(s, path, nList = 16,
-            maxDrift = 0.05, refineIterations = 2)
-          val corpus = base.unionByName(newCells)
-          // TakeOrdered: a bare limit over a shuffle-derived frame is
-          // not stable across the several independent actions below
-          val qs = corpus.filter(col("vec_id") % 97 === 0)
-            .orderBy("vec_id").limit(16)
-            .select(col("vec_id").as("query_id"), col("embedding"))
-          val truth = graft.ops.Similarity
-            .bruteForceTopK(corpus, qs, k = 10).select("query_id", "id")
-          val got = graft.ops.IvfIndex
-            .topK(s, path, qs, k = 10, nProbe = 12)
-            .select("query_id", "id")
-          val nHit = truth.join(got, Seq("query_id", "id"), "left_semi")
-            .count().toDouble
-          val nTrue = truth.count().toDouble
-          (st.staleness > 0.1, rb.nonEmpty,
-            rb.exists(_.improvement > 0.0), nHit / nTrue >= 0.9)
-        }
-      Seq((drift, fired, restored, recallOk)).toDF("drift_detected",
-        "rebuild_fired", "fit_restored", "recall_ok_after")
+      val emb = t(s, d, "embeddings").select(col("vec_id"),
+        graft.functions.Vectors.toDouble(col("embedding"))
+          .as("embedding"))
+      val anchors = broadcast(emb.filter(col("vec_id") < 16)
+        .select((col("vec_id") % 16).as("k"),
+          col("embedding").as("anchor")))
+      val clustered = emb.filter(col("vec_id") >= 16)
+        .withColumn("k", expr("(vec_id div 2) % 16"))
+        .join(anchors, "k")
+        .select(col("k"), col("vec_id"),
+          zip_with(col("anchor"), col("embedding"),
+            (a, x) => a + lit(0.05) * x).as("embedding"))
+      val base = clustered.filter(col("k") < 8)
+        .select("vec_id", "embedding")
+      val newCells = clustered.filter(col("k") >= 8)
+        .select("vec_id", "embedding")
+      val path = s"/tmp/graft_ivfrebuild_${sfTag(d)}"
+      rmrf(s, path)
+      graft.ops.IvfIndex.build(base, path, nList = 8,
+        refineIterations = 2)
+      val st = graft.ops.IvfIndex.append(s, path, newCells)
+      val rb = graft.ops.IvfIndex.rebuildIfStale(s, path, nList = 16,
+        maxDrift = 0.05, refineIterations = 2)
+      val corpus = base.unionByName(newCells)
+      // TakeOrdered: a bare limit over a shuffle-derived frame is
+      // not stable across the several independent actions below
+      val qs = corpus.filter(col("vec_id") % 97 === 0)
+        .orderBy("vec_id").limit(16)
+        .select(col("vec_id").as("query_id"), col("embedding"))
+      val truth = graft.ops.Similarity
+        .bruteForceTopK(corpus, qs, k = 10).select("query_id", "id")
+      val got = graft.ops.IvfIndex
+        .topK(s, path, qs, k = 10, nProbe = 12)
+        .select("query_id", "id")
+      val nHit = truth.join(got, Seq("query_id", "id"), "left_semi")
+        .count().toDouble
+      val nTrue = truth.count().toDouble
+      Seq((st.staleness > 0.1, rb.nonEmpty,
+        rb.exists(_.improvement > 0.0), nHit / nTrue >= 0.9))
+        .toDF("drift_detected", "rebuild_fired", "fit_restored",
+          "recall_ok_after")
     },
       ("SELECT true AS drift_detected, true AS rebuild_fired, " +
         "true AS fit_restored, true AS recall_ok_after")),
@@ -767,10 +725,9 @@ object SimilarityGates {
     // probe join gains more from AQE's partition coalescing than it
     // pays in re-planning jobs, the a28 trade.)
     Gate("s_mutual_nn_ann", (s, d) => {
-      import s.implicits._
       val corpus = t(s, d, "embeddings").select(col("vec_id"),
         graft.functions.Vectors.toDouble(col("embedding")).as("embedding"))
-      val truth = mutualTruthPairs(s, d, corpus).toDF("a", "b")
+      val truth = graft.ops.Similarity.mutualTopOne(corpus).select("a", "b")
       val got = graft.ops.Similarity.mutualTopOneAnn(corpus,
           nList = 16, nProbe = 13, refineIterations = 3)
         .select(col("a"), col("b"), lit(1L).as("__g"))

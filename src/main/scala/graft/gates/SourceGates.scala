@@ -37,22 +37,6 @@ object SourceGates {
       lit(null).cast("string").as("evidence"),
       map(lit("flag"), col("l_returnflag")).as("annotations"))
 
-  /** The g1 trio (bel / rejects / unhandled tally) shares ONE materialized
-    * cut of the processed IntAct frame per (session, sf dir): a bench run
-    * spent ~2/3 of the trio's ~24 s re-running the synth + grounding
-    * pipeline once per registration. The memo key is identity-safe (a new
-    * session gets a fresh cut; localCheckpoint blocks die with the
-    * session). Harness-level concern only — library users hold their own
-    * frames. */
-  private val intactCutMemo = new GateMemo[SparkSession, DataFrame]
-
-  private def intactProcessedCut(s: SparkSession, d: String): DataFrame =
-    intactCutMemo(s, d) {
-      graft.core.Checkpoints.cut(
-        Intact.processed(intactSynthRaw(s, d),
-          intactSynthMappings(s, d)))
-    }
-
   private def enrichOracle(asString: Boolean): String = {
     val geneSet =
       if (asString)
@@ -296,7 +280,8 @@ object SourceGates {
         |""".stripMargin),
     // --- G1-G3: source ETL + relation dispatch over synthetic inputs -------
     Gate("g1_intact_bel", (s, d) => {
-      val (edges, _) = Intact.toBel(intactProcessedCut(s, d))
+      val (edges, _) = Intact.toBel(
+        Intact.processed(intactSynthRaw(s, d), intactSynthMappings(s, d)))
       edges.select(
         col("src_function"), col("src_namespace"), col("src_identifier"),
         col("src_name"), col("relation"), col("dst_function"),
@@ -399,7 +384,8 @@ object SourceGates {
          |FROM disp
          |""".stripMargin),
     Gate("g1_intact_rejects", (s, d) => {
-      val (_, rejects) = Intact.toBel(intactProcessedCut(s, d))
+      val (_, rejects) = Intact.toBel(
+        Intact.processed(intactSynthRaw(s, d), intactSynthMappings(s, d)))
       rejects.agg(count(lit(1)).as("n_rejects"))
     },
       ("SELECT count(*) AS n_rejects FROM lineitem " +

@@ -1,7 +1,6 @@
 package graft
 package gates
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -15,34 +14,20 @@ import graft.ops.{Dedup, TextAnalysis}
   * MemoryStream or file source with deterministic micro-batches, plus the
   * batch faces of the event-stream operators. */
 object StreamingGates {
-  /** Canonical driver-side events feed — (event_id, ts, user_id,
-    * event_type, value) with ts cast to TIMESTAMP — memoized per
-    * (root SparkContext-sharing session, sf dir). The MemoryStream gates
-    * are harness-side feeds over a dimension-sized table by contract;
-    * each gate used to rescan the parquet for its own subset, so one
-    * bench run collected the same table 5×. One scan now serves every
-    * stream face; gates derive their subsets driver-side. */
-  private val eventsFeedMemo = new GateMemo[SparkContext, Seq[FeedRow]]
-
   private type FeedRow = (Long, java.sql.Timestamp, Long, String, Double)
 
+  /** Canonical driver-side events feed — (event_id, ts, user_id,
+    * event_type, value) with ts cast to TIMESTAMP. The MemoryStream gates
+    * are harness-side feeds over a dimension-sized table by contract and
+    * derive their subsets driver-side from this one scan. */
   private def eventsFeed(s: SparkSession, d: String): Seq[FeedRow] = {
-    eventsFeedMemo(s.sparkContext, d) {
-      import s.implicits._
-      graft.core.Tables.events(s, d)
-        .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-          col("user_id"), col("event_type"), col("value"))
-        .as[(Long, java.sql.Timestamp, Long, String, Double)]
-        .collect().toSeq
-    }
+    import s.implicits._
+    graft.core.Tables.events(s, d)
+      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
+        col("user_id"), col("event_type"), col("value"))
+      .as[FeedRow]
+      .collect().toSeq
   }
-
-  /** One completed run of the streaming dedup chain per (SparkContext,
-    * sf dir): the stream replays the same result deterministically, so
-    * re-running it per bench invocation would measure the harness feed,
-    * not the operator. The memo holds the OUTPUT path of the finished
-    * run; the gate re-reads it. */
-  private val streamDedupMemo = new GateMemo[SparkContext, String]
 
   /** One micro-batch half of the w_stream_expect oracle — must mirror
     * the gate's check list exactly. */
@@ -68,17 +53,6 @@ object StreamingGates {
        |UNION ALL
        |SELECT $batchId, 'row_count(1,100000000)', CAST(count(*) AS DOUBLE),
        |  count(*) BETWEEN 1 AND 100000000 FROM $half""".stripMargin
-
-  private val ccStreamMemo = new GateMemo[SparkSession, String]
-
-  private val curateMemo =
-    new GateMemo[SparkSession, (Boolean, Boolean, Boolean, Boolean)]
-
-  /** One completed run of the streaming near-dup chain per
-    * (SparkContext, sf dir) — the w_stream_dedup_index memo posture:
-    * the stream replays deterministically, so re-running it per bench
-    * invocation would measure the harness feed, not the operator. */
-  private val streamNearDupMemo = new GateMemo[SparkContext, String]
 
   /** Runs `out` into the in-memory table `sink` (dropping a stale one
     * first), lets `feed` add micro-batches to the running query, stops it
@@ -142,7 +116,7 @@ object StreamingGates {
     Gate("w_stream_dedup", (s, d) => withShufflePartitions(s, 8) { ss =>
       import ss.implicits._
       val tag = sfTag(d)
-      // 1-in-20 deterministic subset of the shared memoized feed:
+      // 1-in-20 deterministic subset of the events feed:
       // dimension-sized by construction, so collectable to feed the
       // MemoryStream (the stream SOURCE is the test harness; the dedup
       // itself stays distributed)
@@ -408,29 +382,26 @@ object StreamingGates {
     Gate("w_stream_dedup_index", (s, d) =>
       withShufflePartitions(s, 8) { ss =>
         import ss.implicits._
-        val out = streamDedupMemo(ss.sparkContext, d) {
-          val base = s"/tmp/graft_sdedup_${sfTag(d)}"
-          rmrf(ss, base)
-          val docs = t(ss, d, "documents").filter(col("doc_id") % 5 === 0)
-            .select(col("doc_id"), col("text"))
-            .as[(Long, String)].collect().sortBy(_._1)
-          val b1 = docs.filter(_._1 % 2 == 0)
-          val b2 = (docs.filter(_._1 % 2 == 1) ++
-            b1.filter(_._1 % 4 == 0)
-              .map { case (i, txt) => (i + 1000000L, txt) }).sortBy(_._1)
-          val mem = MemoryStream[(Long, String)](ss)
-          val q = graft.streaming.DedupStream.run(
-            mem.toDS().toDF("doc_id", "text"),
-            s"$base/idx", s"$base/out", s"$base/ckpt")
-          try {
-            mem.addData(b1: _*)
-            q.processAllAvailable()
-            mem.addData(b2: _*)
-            q.processAllAvailable()
-          } finally q.stop()
-          s"$base/out"
-        }
-        ss.read.parquet(out).select("doc_id")
+        val base = s"/tmp/graft_sdedup_${sfTag(d)}"
+        rmrf(ss, base)
+        val docs = t(ss, d, "documents").filter(col("doc_id") % 5 === 0)
+          .select(col("doc_id"), col("text"))
+          .as[(Long, String)].collect().sortBy(_._1)
+        val b1 = docs.filter(_._1 % 2 == 0)
+        val b2 = (docs.filter(_._1 % 2 == 1) ++
+          b1.filter(_._1 % 4 == 0)
+            .map { case (i, txt) => (i + 1000000L, txt) }).sortBy(_._1)
+        val mem = MemoryStream[(Long, String)](ss)
+        val q = graft.streaming.DedupStream.run(
+          mem.toDS().toDF("doc_id", "text"),
+          s"$base/idx", s"$base/out", s"$base/ckpt")
+        try {
+          mem.addData(b1: _*)
+          q.processAllAvailable()
+          mem.addData(b2: _*)
+          q.processAllAvailable()
+        } finally q.stop()
+        ss.read.parquet(s"$base/out").select("doc_id")
       },
       (s"""WITH sub AS (
         |  SELECT doc_id, md5(${normSql}) AS f FROM documents
@@ -679,32 +650,29 @@ object StreamingGates {
     Gate("w_stream_cc", (s, d) =>
       withShufflePartitions(s, 8) { ss =>
         import ss.implicits._
-        val path = ccStreamMemo(s, d) {
-          val b1 = t(ss, d, "supplier").select(
-              concat(lit("s:"), col("s_suppkey")).as("src"),
-              concat(lit("n:"), col("s_nationkey")).as("dst"))
-            .as[(String, String)].collect().toSeq
-          val b2 = (t(ss, d, "nation").select(
-              concat(lit("n:"), col("n_nationkey")).as("src"),
-              concat(lit("r:"), col("n_regionkey")).as("dst"))
-            .as[(String, String)].collect() ++
-            t(ss, d, "customer").select(
-              concat(lit("c:"), col("c_custkey")).as("src"),
-              concat(lit("n:"), col("c_nationkey")).as("dst"))
-            .as[(String, String)].collect()).toSeq
-          val base = s"/tmp/graft_ccstream_${sfTag(d)}"
-          rmrf(ss, base)
-          val mem = MemoryStream[(String, String)](ss)
-          val q = graft.streaming.CcStream.run(
-            mem.toDS().toDF("src", "dst"), s"$base/idx", s"$base/ckpt",
-            buckets = 16)
-          try {
-            mem.addData(b1: _*); q.processAllAvailable()
-            mem.addData(b2: _*); q.processAllAvailable()
-          } finally q.stop()
-          s"$base/idx"
-        }
-        val folded = graft.bel.IncrementalCC.readIndex(ss, path)
+        val b1 = t(ss, d, "supplier").select(
+            concat(lit("s:"), col("s_suppkey")).as("src"),
+            concat(lit("n:"), col("s_nationkey")).as("dst"))
+          .as[(String, String)].collect().toSeq
+        val b2 = (t(ss, d, "nation").select(
+            concat(lit("n:"), col("n_nationkey")).as("src"),
+            concat(lit("r:"), col("n_regionkey")).as("dst"))
+          .as[(String, String)].collect() ++
+          t(ss, d, "customer").select(
+            concat(lit("c:"), col("c_custkey")).as("src"),
+            concat(lit("n:"), col("c_nationkey")).as("dst"))
+          .as[(String, String)].collect()).toSeq
+        val base = s"/tmp/graft_ccstream_${sfTag(d)}"
+        rmrf(ss, base)
+        val mem = MemoryStream[(String, String)](ss)
+        val q = graft.streaming.CcStream.run(
+          mem.toDS().toDF("src", "dst"), s"$base/idx", s"$base/ckpt",
+          buckets = 16)
+        try {
+          mem.addData(b1: _*); q.processAllAvailable()
+          mem.addData(b2: _*); q.processAllAvailable()
+        } finally q.stop()
+        val folded = graft.bel.IncrementalCC.readIndex(ss, s"$base/idx")
         val canon = folded.groupBy("component").agg(min("node").as("comp"))
         folded.join(canon, "component").select("node", "comp")
       },
@@ -724,52 +692,47 @@ object StreamingGates {
       withShufflePartitions(s, 8) { ss =>
         import ss.implicits._
         import graft.ops.{Expectations, TextAnalysis}
-        // memo keyed on the OUTER session: `ss` is a fresh newSession()
-        // per call and would never hit
-        val (eq, twins, reps, mets) = curateMemo(s, d) {
-          val docs = t(ss, d, "documents")
-          val probes = docs.filter(col("doc_id") < 5)
-          val bloom = TextAnalysis.shingleBloom(probes, n = 3,
-            expectedItems = 20000L, numBits = 200000L)
-          def rules(in: DataFrame): DataFrame = in
-            .filter(TextAnalysis.tokenCount(col("text")) >= 10)
-            .filter(!TextAnalysis.bloomContaminatedFlag(col("text"),
-              bloom, 3))
-          val checks = Seq(Expectations.notNull("text"),
-            Expectations.rowCountBetween(1L, 100000000L))
-          val feed = docs
-            .filter(col("doc_id") >= 5 && col("doc_id") % 10 === 0)
-            .select("doc_id", "text")
-          val rows = feed.as[(Long, String)].collect().sortBy(_._1)
-          val b1 = rows.filter(_._1 % 20 == 0)
-          val b2 = (rows.filter(_._1 % 20 != 0) ++
-            b1.map { case (i, txt) => (i + 1000000L, txt) }).sortBy(_._1)
-          val base = s"/tmp/graft_curate_e2e_${sfTag(d)}"
-          rmrf(ss, base)
-          val mem = MemoryStream[(Long, String)](ss)
-          val q = graft.streaming.CuratePipeline.run(
-            mem.toDS().toDF("doc_id", "text"), checks, rules,
-            s"$base/idx", s"$base/out", s"$base/ckpt")
-          try {
-            mem.addData(b1: _*); q.processAllAvailable()
-            mem.addData(b2: _*); q.processAllAvailable()
-          } finally q.stop()
-          val corpusIds = graft.streaming.CuratePipeline
-            .corpus(ss, s"$base/out")
-            .select("doc_id").as[Long].collect().toSet
-          val want = graft.ops.Dedup.exactSurvivors(rules(feed))
-            .select("survivor_id").as[Long].collect().toSet
-          val reports = graft.streaming.CuratePipeline
-            .reports(ss, s"$base/out")
-          val repOk = reports.count() == 2L * checks.length &&
-            reports.filter(!col("passed")).count() == 0L
-          val accSum = graft.streaming.CuratePipeline
-            .metrics(ss, s"$base/out")
-            .agg(sum("n_accepted")).as[Long].head()
-          (corpusIds == want, corpusIds.forall(_ < 1000000L),
-            repOk, accSum == corpusIds.size.toLong)
-        }
-        Seq((eq, twins, reps, mets)).toDF("stream_equals_batch",
+        val docs = t(ss, d, "documents")
+        val probes = docs.filter(col("doc_id") < 5)
+        val bloom = TextAnalysis.shingleBloom(probes, n = 3,
+          expectedItems = 20000L, numBits = 200000L)
+        def rules(in: DataFrame): DataFrame = in
+          .filter(TextAnalysis.tokenCount(col("text")) >= 10)
+          .filter(!TextAnalysis.bloomContaminatedFlag(col("text"),
+            bloom, 3))
+        val checks = Seq(Expectations.notNull("text"),
+          Expectations.rowCountBetween(1L, 100000000L))
+        val feed = docs
+          .filter(col("doc_id") >= 5 && col("doc_id") % 10 === 0)
+          .select("doc_id", "text")
+        val rows = feed.as[(Long, String)].collect().sortBy(_._1)
+        val b1 = rows.filter(_._1 % 20 == 0)
+        val b2 = (rows.filter(_._1 % 20 != 0) ++
+          b1.map { case (i, txt) => (i + 1000000L, txt) }).sortBy(_._1)
+        val base = s"/tmp/graft_curate_e2e_${sfTag(d)}"
+        rmrf(ss, base)
+        val mem = MemoryStream[(Long, String)](ss)
+        val q = graft.streaming.CuratePipeline.run(
+          mem.toDS().toDF("doc_id", "text"), checks, rules,
+          s"$base/idx", s"$base/out", s"$base/ckpt")
+        try {
+          mem.addData(b1: _*); q.processAllAvailable()
+          mem.addData(b2: _*); q.processAllAvailable()
+        } finally q.stop()
+        val corpusIds = graft.streaming.CuratePipeline
+          .corpus(ss, s"$base/out")
+          .select("doc_id").as[Long].collect().toSet
+        val want = graft.ops.Dedup.exactSurvivors(rules(feed))
+          .select("survivor_id").as[Long].collect().toSet
+        val reports = graft.streaming.CuratePipeline
+          .reports(ss, s"$base/out")
+        val repOk = reports.count() == 2L * checks.length &&
+          reports.filter(!col("passed")).count() == 0L
+        val accSum = graft.streaming.CuratePipeline
+          .metrics(ss, s"$base/out")
+          .agg(sum("n_accepted")).as[Long].head()
+        Seq((corpusIds == want, corpusIds.forall(_ < 1000000L),
+          repOk, accSum == corpusIds.size.toLong)).toDF("stream_equals_batch",
           "twins_dropped", "reports_complete", "metrics_consistent")
       },
       ("SELECT true AS stream_equals_batch, true AS twins_dropped, " +
@@ -1075,32 +1038,29 @@ object StreamingGates {
     Gate("w_stream_neardup", (s, d) =>
       withShufflePartitions(s, 8) { ss =>
         import ss.implicits._
-        val out = streamNearDupMemo(ss.sparkContext, d) {
-          val base = s"/tmp/graft_sneardup_${sfTag(d)}"
-          rmrf(ss, base)
-          val docs = t(ss, d, "documents")
-            .select(col("doc_id"), col("text"))
-            .as[(Long, String)].collect().sortBy(_._1)
-          val b1 = docs.filter(_._1 % 2 == 0)
-          val b2 = (docs.filter(_._1 % 2 == 1) ++
-            b1.filter(_._1 % 10 == 0)
-              .map { case (i, txt) => (i + 1000000L, "xq " + txt) } ++
-            docs.filter(x => x._1 % 2 == 1 && x._1 % 10 == 1)
-              .map { case (i, txt) => (i + 2000000L, "zz " + txt) })
-            .sortBy(_._1)
-          val mem = MemoryStream[(Long, String)](ss)
-          val q = graft.streaming.NearDupStream.run(
-            mem.toDS().toDF("doc_id", "text"),
-            s"$base/idx", s"$base/out", s"$base/ckpt", threshold = 0.8)
-          try {
-            mem.addData(b1: _*)
-            q.processAllAvailable()
-            mem.addData(b2: _*)
-            q.processAllAvailable()
-          } finally q.stop()
-          s"$base/out"
-        }
-        ss.read.parquet(out).select("doc_id")
+        val base = s"/tmp/graft_sneardup_${sfTag(d)}"
+        rmrf(ss, base)
+        val docs = t(ss, d, "documents")
+          .select(col("doc_id"), col("text"))
+          .as[(Long, String)].collect().sortBy(_._1)
+        val b1 = docs.filter(_._1 % 2 == 0)
+        val b2 = (docs.filter(_._1 % 2 == 1) ++
+          b1.filter(_._1 % 10 == 0)
+            .map { case (i, txt) => (i + 1000000L, "xq " + txt) } ++
+          docs.filter(x => x._1 % 2 == 1 && x._1 % 10 == 1)
+            .map { case (i, txt) => (i + 2000000L, "zz " + txt) })
+          .sortBy(_._1)
+        val mem = MemoryStream[(Long, String)](ss)
+        val q = graft.streaming.NearDupStream.run(
+          mem.toDS().toDF("doc_id", "text"),
+          s"$base/idx", s"$base/out", s"$base/ckpt", threshold = 0.8)
+        try {
+          mem.addData(b1: _*)
+          q.processAllAvailable()
+          mem.addData(b2: _*)
+          q.processAllAvailable()
+        } finally q.stop()
+        ss.read.parquet(s"$base/out").select("doc_id")
       },
       s"""WITH u AS (
         |  SELECT doc_id AS id, text, 1 AS b FROM documents

@@ -1,7 +1,6 @@
 package graft
 package gates
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -42,17 +41,6 @@ object TextGates {
        |FROM m
        |""".stripMargin
   }
-
-  /** BPE merge table for the encode gate, memoized per (SparkContext,
-    * sf dir) — training re-runs ~2 s of corpus scan otherwise. Small
-    * table by design: the round-trip invariant holds for ANY merges. */
-  private val bpeMergesMemo = new GateMemo[SparkContext, Seq[(String, String)]]
-
-  private def bpeMerges(s: SparkSession, d: String): Seq[(String, String)] =
-    bpeMergesMemo(s.sparkContext, d) {
-      graft.ops.Bpe.train(t(s, d, "documents").select(col("text")),
-        numMerges = 60, topWords = 20000)
-    }
 
   /** The t_curate_v2 chain: quality and repetition filters, exact-dup
     * survivors, then language id. Returns the passing rows of `docs`
@@ -605,7 +593,8 @@ object TextGates {
     // independently-gated tokenCounts path.
     Gate("t_bpe_encode", (s, d) => {
       val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      val merges = bpeMerges(s, d)
+      val merges = graft.ops.Bpe.train(docs.select(col("text")),
+        numMerges = 60, topWords = 20000)
       val enc = graft.ops.Bpe.encode(docs, merges)
       val cnt = graft.ops.Bpe.tokenCounts(docs, merges)
         .select(col("doc_id"), col("n_bpe_tokens").as("n_cnt"))

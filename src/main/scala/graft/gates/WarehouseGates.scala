@@ -11,17 +11,6 @@ import graft.core.{SourceContext, Tables}
   * file layouts and compaction (`ops.Layout`), CDC and snapshot diffs
   * (`ops.Cdc`). */
 object WarehouseGates {
-  /** One bucketed-table write per (session, sf dir) — reruns (bench n=2,
-    * verify) reuse the warehouse tables instead of re-shuffling them. */
-  private val bucketMemo = new GateMemo[SparkSession, Unit]
-
-  private val zorder3Memo = new GateMemo[SparkSession, String]
-
-  private val hilbertMemo = new GateMemo[SparkSession, String]
-
-  private val compactMemo =
-    new GateMemo[SparkSession, (Boolean, Boolean, Boolean, Boolean)]
-
   val gates: Seq[Gate] = Seq(
     // --- K1/K2: DDL + batch write + drop lifecycle with provenance --------
     Gate("k1_k2_table_lifecycle", (s, d) => {
@@ -62,22 +51,19 @@ object WarehouseGates {
     // The §4.3 partitioning story made real: membership and pathway tables
     // written bucketed by the join key join with NO exchange on either
     // side (BucketingSpec pins the plan; this query pins the results).
-    // Bucketed once per (session, sf) — the write is the amortized cost.
     Gate("j1_bucketed_join", (s, d) => {
       val tag = sfTag(d)
-      bucketMemo(s, d) {
-        graft.core.Bucketing.writeBucketed(
-          t(s, d, "lineitem").select(
-            col("l_partkey").as("pathway_id"),
-            col("l_suppkey").as("protein_id")),
-          s"bkt_membership_$tag", s"/tmp/graft_bkt_$tag/membership",
-          "pathway_id", buckets = 8)
-        graft.core.Bucketing.writeBucketed(
-          t(s, d, "part").select(
-            col("p_partkey").as("pathway_id"), col("p_name").as("name")),
-          s"bkt_pathways_$tag", s"/tmp/graft_bkt_$tag/pathways",
-          "pathway_id", buckets = 8)
-      }
+      graft.core.Bucketing.writeBucketed(
+        t(s, d, "lineitem").select(
+          col("l_partkey").as("pathway_id"),
+          col("l_suppkey").as("protein_id")),
+        s"bkt_membership_$tag", s"/tmp/graft_bkt_$tag/membership",
+        "pathway_id", buckets = 8)
+      graft.core.Bucketing.writeBucketed(
+        t(s, d, "part").select(
+          col("p_partkey").as("pathway_id"), col("p_name").as("name")),
+        s"bkt_pathways_$tag", s"/tmp/graft_bkt_$tag/pathways",
+        "pathway_id", buckets = 8)
       graft.core.Bucketing.read(s, s"bkt_membership_$tag")
         .join(graft.core.Bucketing.read(s, s"bkt_pathways_$tag"),
           "pathway_id")
@@ -117,13 +103,10 @@ object WarehouseGates {
     // PartitionFilters); the gate value-checks the partition-column
     // round-trip against the unpartitioned oracle scan.
     Gate("k15_partitioned_layout", (s, d) => {
-      val out = layoutMemo(s.sparkContext, s"$d#partitioned") {
-        val p = s"/tmp/graft_part_layout_${sfTag(d)}"
-        graft.core.Tables.load(s, d, "documents")
-          .write.mode("overwrite").partitionBy("lang").parquet(p)
-        p
-      }
-      s.read.parquet(out).filter(col("lang") === "en")
+      val p = s"/tmp/graft_part_layout_${sfTag(d)}"
+      graft.core.Tables.load(s, d, "documents")
+        .write.mode("overwrite").partitionBy("lang").parquet(p)
+      s.read.parquet(p).filter(col("lang") === "en")
         .groupBy("source").agg(count(lit(1)).as("n"),
           sum("n_chars").as("chars"))
     },
@@ -137,13 +120,10 @@ object WarehouseGates {
     // as 2 doc_id-sorted files (row-group stats tighten); the gate re-reads
     // the compacted layout and must hash-match the original table exactly.
     Gate("k16_compacted", (s, d) => {
-      val out = layoutMemo(s.sparkContext, s"$d#compacted") {
-        val p = s"/tmp/graft_compacted_${sfTag(d)}"
-        graft.ops.Layout.compact(s, s"$d/documents.parquet", p,
-          numFiles = 2, Seq("doc_id"))
-        p
-      }
-      s.read.parquet(out)
+      val p = s"/tmp/graft_compacted_${sfTag(d)}"
+      graft.ops.Layout.compact(s, s"$d/documents.parquet", p,
+        numFiles = 2, Seq("doc_id"))
+      s.read.parquet(p)
         .select("doc_id", "text", "lang", "source", "n_chars")
     },
       "SELECT doc_id, text, lang, source, n_chars FROM documents"),
@@ -155,13 +135,10 @@ object WarehouseGates {
     // clustered layout and re-derives every row's Morton code — content
     // AND the interleave arithmetic are value-exact vs the oracle.
     Gate("k18_zorder_layout", (s, d) => {
-      val out = layoutMemo(s.sparkContext, s"$d#zorder") {
-        val p = s"/tmp/graft_zorder_${sfTag(d)}"
-        graft.ops.Layout.zorderCompact(s, s"$d/documents.parquet", p,
-          numFiles = 2, "doc_id", "n_chars")
-        p
-      }
-      s.read.parquet(out)
+      val p = s"/tmp/graft_zorder_${sfTag(d)}"
+      graft.ops.Layout.zorderCompact(s, s"$d/documents.parquet", p,
+        numFiles = 2, "doc_id", "n_chars")
+      s.read.parquet(p)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"),
           graft.ops.Layout.mortonCode(col("doc_id").bitwiseAND(lit(255)),
@@ -182,15 +159,12 @@ object WarehouseGates {
     // hash-match the source projection — a lossy or re-typed round-trip
     // fails the gate.
     Gate("k17_jsonl_export", (s, d) => {
-      val out = layoutMemo(s.sparkContext, s"$d#jsonl") {
-        val p = s"/tmp/graft_jsonl_${sfTag(d)}"
-        graft.ops.Layout.exportJsonl(
-          graft.core.Tables.load(s, d, "documents")
-            .select("doc_id", "lang", "text"),
-          p, shards = 3)
-        p
-      }
-      s.read.schema("doc_id BIGINT, lang STRING, text STRING").json(out)
+      val p = s"/tmp/graft_jsonl_${sfTag(d)}"
+      graft.ops.Layout.exportJsonl(
+        graft.core.Tables.load(s, d, "documents")
+          .select("doc_id", "lang", "text"),
+        p, shards = 3)
+      s.read.schema("doc_id BIGINT, lang STRING, text STRING").json(p)
     },
       "SELECT doc_id, lang, text FROM documents"),
 
@@ -211,19 +185,16 @@ object WarehouseGates {
     // N-column interleave: content preserved row-for-row (hash-compared
     // against the plain projection) and the emitted z column bit-exact
     // vs the DuckDB shift/mask expression — the same contract as k18,
-    // one dimension up. Layout memoized per (session, sf).
+    // one dimension up.
     Gate("k20_zorder3_layout", (s, d) => {
-      val out = zorder3Memo(s, d) {
-        val base = s"/tmp/graft_zorder3_${sfTag(d)}"
-        rmrf(s, base)
-        t(s, d, "lineitem")
-          .select("l_orderkey", "l_partkey", "l_suppkey")
-          .write.parquet(s"$base/in")
-        graft.ops.Layout.zorderCompactN(s, s"$base/in", s"$base/out",
-          numFiles = 2, Seq("l_orderkey", "l_partkey", "l_suppkey"))
-        s"$base/out"
-      }
-      s.read.parquet(out).select(col("l_orderkey"), col("l_partkey"),
+      val base = s"/tmp/graft_zorder3_${sfTag(d)}"
+      rmrf(s, base)
+      t(s, d, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_suppkey")
+        .write.parquet(s"$base/in")
+      graft.ops.Layout.zorderCompactN(s, s"$base/in", s"$base/out",
+        numFiles = 2, Seq("l_orderkey", "l_partkey", "l_suppkey"))
+      s.read.parquet(s"$base/out").select(col("l_orderkey"), col("l_partkey"),
         col("l_suppkey"),
         graft.ops.Layout.mortonCodeN(Seq(
           col("l_orderkey").bitwiseAND(lit(255)),
@@ -246,33 +217,30 @@ object WarehouseGates {
     // (liquid-clustering's curve): content must survive the rewrite
     // row-for-row (oracle hash vs the plain projection), and the code
     // itself is cross-checked IN-GATE at data scale — bijectivity means
-    // #distinct codes == #distinct masked cells, asserted once inside
-    // the memo (the unit-step adjacency + exhaustive encode/decode
+    // #distinct codes == #distinct masked cells, asserted on every
+    // build (the unit-step adjacency + exhaustive encode/decode
     // round-trip live in LayoutSpec; no SQL engine can express the
     // Gray-code transform, so the per-row code has no DuckDB oracle).
     Gate("k21_hilbert_layout", (s, d) => {
-      val out = hilbertMemo(s, d) {
-        val base = s"/tmp/graft_hilbert3_${sfTag(d)}"
-        rmrf(s, base)
-        t(s, d, "lineitem")
-          .select("l_orderkey", "l_partkey", "l_suppkey")
-          .write.parquet(s"$base/in")
-        val back = graft.ops.Layout.hilbertCompactN(s, s"$base/in",
-          s"$base/out", numFiles = 2,
-          Seq("l_orderkey", "l_partkey", "l_suppkey"))
-        val cells = Seq("l_orderkey", "l_partkey", "l_suppkey")
-          .map(c => col(c).bitwiseAND(lit(255)))
-        val agg = back
-          .withColumn("__h", graft.ops.Layout.hilbertCodeN(cells, 8))
-          .agg(countDistinct(col("__h")).as("codes"),
-            countDistinct(cells.head, cells.tail: _*).as("cells"))
-          .head()
-        require(agg.getLong(0) == agg.getLong(1),
-          s"hilbert code not injective on the data: ${agg.getLong(0)} " +
-            s"codes for ${agg.getLong(1)} cells")
-        s"$base/out"
-      }
-      s.read.parquet(out).select("l_orderkey", "l_partkey", "l_suppkey")
+      val base = s"/tmp/graft_hilbert3_${sfTag(d)}"
+      rmrf(s, base)
+      t(s, d, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_suppkey")
+        .write.parquet(s"$base/in")
+      val back = graft.ops.Layout.hilbertCompactN(s, s"$base/in",
+        s"$base/out", numFiles = 2,
+        Seq("l_orderkey", "l_partkey", "l_suppkey"))
+      val cells = Seq("l_orderkey", "l_partkey", "l_suppkey")
+        .map(c => col(c).bitwiseAND(lit(255)))
+      val agg = back
+        .withColumn("__h", graft.ops.Layout.hilbertCodeN(cells, 8))
+        .agg(countDistinct(col("__h")).as("codes"),
+          countDistinct(cells.head, cells.tail: _*).as("cells"))
+        .head()
+      require(agg.getLong(0) == agg.getLong(1),
+        s"hilbert code not injective on the data: ${agg.getLong(0)} " +
+          s"codes for ${agg.getLong(1)} cells")
+      s.read.parquet(s"$base/out").select("l_orderkey", "l_partkey", "l_suppkey")
     },
       "SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem"),
 
@@ -289,40 +257,36 @@ object WarehouseGates {
     Gate("k22_compact_ingest", (s, d) => {
       import s.implicits._
       import graft.streaming.CuratePipeline
-      val (chainOk, filesOk, replayOk, appendOk) =
-        compactMemo(s, d) {
-          val docs = t(s, d, "documents").select("doc_id", "text")
-            .filter(col("doc_id") % 10 === 0)
-          val b0 = docs.filter(col("doc_id") % 20 === 0)
-          val b1 = docs.filter(col("doc_id") % 20 =!= 0)
-          val base = s"/tmp/graft_compact_${sfTag(d)}"
-          rmrf(s, base)
-          val checks = Seq(graft.ops.Expectations.notNull("text"))
-          def rules(in: DataFrame): DataFrame =
-            in.filter(graft.ops.TextAnalysis.tokenCount(col("text")) >= 5)
-          val (idx, out) = (s"$base/idx", s"$base/out")
-          CuratePipeline.curateBatch(s, b0, 0L, checks, rules, idx, out)
-          CuratePipeline.curateBatch(s, b1, 1L, checks, rules, idx, out)
-          def ids() = CuratePipeline.corpus(s, out)
-            .select("doc_id").as[Long].collect().toSet
-          val want = graft.ops.Dedup.exactSurvivors(rules(docs))
-            .select("survivor_id").as[Long].collect().toSet
-          val (nc, ni) = CuratePipeline.compactIngest(s, idx, out,
-            numFiles = 4)
-          val compacted = ids()
-          val replay = CuratePipeline.curateBatch(s, b1, 1L, checks,
-            rules, idx, out)
-          val replayed = ids()
-          val fresh = Seq((9000000001L, "six brand new tokens never seen"))
-            .toDF("doc_id", "text")
-          val m2 = CuratePipeline.curateBatch(s, fresh, 2L, checks,
-            rules, idx, out)
-          (compacted == want,
-            nc <= 4L && ni <= 4L,
-            replay.nAccepted == 0L && replayed == want,
-            m2.nAccepted == 1L && ids() == (want + 9000000001L))
-        }
-      Seq((chainOk, filesOk, replayOk, appendOk)).toDF(
+      val docs = t(s, d, "documents").select("doc_id", "text")
+        .filter(col("doc_id") % 10 === 0)
+      val b0 = docs.filter(col("doc_id") % 20 === 0)
+      val b1 = docs.filter(col("doc_id") % 20 =!= 0)
+      val base = s"/tmp/graft_compact_${sfTag(d)}"
+      rmrf(s, base)
+      val checks = Seq(graft.ops.Expectations.notNull("text"))
+      def rules(in: DataFrame): DataFrame =
+        in.filter(graft.ops.TextAnalysis.tokenCount(col("text")) >= 5)
+      val (idx, out) = (s"$base/idx", s"$base/out")
+      CuratePipeline.curateBatch(s, b0, 0L, checks, rules, idx, out)
+      CuratePipeline.curateBatch(s, b1, 1L, checks, rules, idx, out)
+      def ids() = CuratePipeline.corpus(s, out)
+        .select("doc_id").as[Long].collect().toSet
+      val want = graft.ops.Dedup.exactSurvivors(rules(docs))
+        .select("survivor_id").as[Long].collect().toSet
+      val (nc, ni) = CuratePipeline.compactIngest(s, idx, out,
+        numFiles = 4)
+      val compacted = ids()
+      val replay = CuratePipeline.curateBatch(s, b1, 1L, checks,
+        rules, idx, out)
+      val replayed = ids()
+      val fresh = Seq((9000000001L, "six brand new tokens never seen"))
+        .toDF("doc_id", "text")
+      val m2 = CuratePipeline.curateBatch(s, fresh, 2L, checks,
+        rules, idx, out)
+      Seq((compacted == want,
+        nc <= 4L && ni <= 4L,
+        replay.nAccepted == 0L && replayed == want,
+        m2.nAccepted == 1L && ids() == (want + 9000000001L))).toDF(
         "chain_equals_batch", "files_bounded", "replay_lands_nothing",
         "new_batch_appends")
     },

@@ -347,4 +347,23 @@ class CliSpec extends SparkSpec {
     Cli.main(Array("ewma", "--input", ev, "--alpha", "0.25", "--top", "5"))
     assert(!spark.sparkContext.isStopped)
   }
+
+  test("a flag without a value throws instead of swallowing the next flag") {
+    val dir = tmpDir("cliflags")
+    val wh = s"$dir/wh"
+    val out = s"$dir/out"
+    // pairing `--append --out X` as append = "--out" would drop the
+    // output path and write to the warehouse default
+    val swallowed = intercept[IllegalArgumentException] {
+      Cli.main(Array("dedup-incremental", "--warehouse", wh,
+        "--append", "--out", out))
+    }
+    assert(swallowed.getMessage.contains("--append"))
+    val trailing = intercept[IllegalArgumentException] {
+      Cli.main(Array("dedup-incremental", "--warehouse", wh,
+        "--out", out, "--append"))
+    }
+    assert(trailing.getMessage.contains("--append"))
+    assert(!new java.io.File(wh).exists() && !new java.io.File(out).exists())
+  }
 }
